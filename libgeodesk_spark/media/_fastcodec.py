@@ -12,9 +12,11 @@ do bit-for-bit (asserted by a golden self-test at load; on ANY doubt the
 engine silently runs pure Python, same outputs, slower).
 
 Build: ``cc -O2 -shared -fPIC -lz`` into a content-hash-named .so under
-``$SPARK_GRAFT_FASTCODEC_DIR`` (default: the system temp dir) at first
-import, atomically (os.replace) so concurrent Python workers race
-safely; later imports dlopen the cached artifact. Set
+``$SPARK_GRAFT_FASTCODEC_DIR`` (default: a per-uid 0700 directory in the
+system temp dir) at first import, atomically (os.replace) so concurrent
+Python workers race safely; later imports dlopen the cached artifact. A
+cached .so that is not a regular file owned by the current uid, or that
+is group- or world-writable, is refused (pure path), never loaded. Set
 ``LIBGEODESK_NO_FASTCODEC=1`` to force the pure path (used by tests to
 prove the two paths agree).
 """
@@ -24,6 +26,7 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import stat
 import subprocess
 import tempfile
 
@@ -389,12 +392,38 @@ int reencode_pipeline(const uint8_t *pix, uint32_t w, uint32_t h, int fmt,
 _ENV_OFF = "LIBGEODESK_NO_FASTCODEC"
 
 
+def _cache_dir() -> str:
+    """``$SPARK_GRAFT_FASTCODEC_DIR``, else a per-uid 0700 directory in
+    the system temp dir (a shared temp dir would let another user plant
+    the .so this process dlopens)."""
+    env = os.environ.get("SPARK_GRAFT_FASTCODEC_DIR")
+    if env:
+        return env
+    d = os.path.join(tempfile.gettempdir(),
+                     f"libgeodesk_fastcodec_{os.getuid()}")
+    os.makedirs(d, mode=0o700, exist_ok=True)
+    st = os.lstat(d)
+    if not stat.S_ISDIR(st.st_mode) or st.st_uid != os.getuid():
+        raise OSError(f"{d} is not a directory owned by uid {os.getuid()}")
+    if stat.S_IMODE(st.st_mode) != 0o700:
+        os.chmod(d, 0o700)
+    return d
+
+
+def _trusted(path: str) -> bool:
+    """A regular file owned by this uid and writable only by it."""
+    st = os.lstat(path)
+    return (stat.S_ISREG(st.st_mode) and st.st_uid == os.getuid()
+            and not st.st_mode & (stat.S_IWGRP | stat.S_IWOTH))
+
+
 def _build_so() -> str:
     tag = hashlib.sha256(C_SOURCE.encode()).hexdigest()[:16]
-    cachedir = (os.environ.get("SPARK_GRAFT_FASTCODEC_DIR")
-                or tempfile.gettempdir())
+    cachedir = _cache_dir()
     so = os.path.join(cachedir, f"libgeodesk_fastcodec_{tag}.so")
-    if os.path.exists(so):
+    if os.path.lexists(so):
+        if not _trusted(so):
+            raise OSError(f"refusing untrusted cached kernel {so}")
         return so
     # pid-suffixed source too: a shared source path could be truncated
     # by one racing worker while another's compiler is mid-read
@@ -406,6 +435,7 @@ def _build_so() -> str:
     try:
         subprocess.run([cc, "-O2", "-shared", "-fPIC", "-o", tmp_so, src,
                         "-lz"], check=True, capture_output=True, timeout=120)
+        os.chmod(tmp_so, 0o755)          # independent of the umask
         os.replace(tmp_so, so)                   # atomic vs racing workers
     finally:
         try:
@@ -436,29 +466,67 @@ def _bind(lib: ctypes.CDLL) -> ctypes.CDLL:
 
 
 def _self_test(lib: ctypes.CDLL) -> bool:
-    """C output must be byte-identical to the pure path on a probe image;
-    in particular the dlopened zlib must behave exactly like CPython's."""
+    """C output must be byte-identical to the pure path on a probe image:
+    each format's encode, the C decode of that encode, and the fused
+    ``reencode_pipeline``; in particular the dlopened zlib must behave
+    exactly like CPython's."""
     import zlib
 
     import numpy as np
     if lib.fastcodec_zlib_version().decode() != zlib.ZLIB_RUNTIME_VERSION:
         return False
     from libgeodesk_spark.media import codec
+    h, w = 33, 17
     rng = np.random.default_rng(1234)
     px = np.ascontiguousarray(
-        rng.integers(0, 256, size=(33, 17, 3), dtype=np.uint8))
-    tmp = np.empty(4 * px.size + 4096, dtype=np.uint8)
-    out = np.empty(2 * px.size + 4096, dtype=np.uint8)
+        rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8))
+    n = px.size
+    tmp = np.empty(4 * n + 4096, dtype=np.uint8)
+    out = np.empty(2 * n + 4096, dtype=np.uint8)
+    out2 = np.empty_like(out)
+    dec = np.empty((h, w, 3), dtype=np.uint8)
+    meta = np.empty(3, dtype=np.int32)
+    res = (ctypes.c_int64 * 3)()
+    ssd = (ctypes.c_uint64 * 1)()
     pp, tp, op = px.ctypes.data, tmp.ctypes.data, out.ctypes.data
-    ln = lib.png_encode(pp, 17, 33, tp, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec.encode_png(px):
-        return False
-    ln = lib.fjpg_encode(pp, 17, 33, tp, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec._encode_fjpg_pure(px):
-        return False
-    ln = lib.bmp_encode(pp, 17, 33, op, out.size)
-    if ln <= 0 or out[:ln].tobytes() != codec.encode_bmp(px):
-        return False
+
+    def fjpg_decode_pure(blob):
+        return np.frombuffer(zlib.decompress(blob[9:]),
+                             dtype=np.uint8).reshape(h, w, 3)
+
+    legs = (  # (fmt code, C encode, pure encode, C decode, pure decode)
+        (0, lambda: lib.png_encode(pp, w, h, tp, op, out.size),
+         codec.encode_png,
+         lambda b: lib.png_decode_f0(b, len(b), dec.ctypes.data, n,
+                                     tp, tmp.size),
+         codec.decode_png),
+        (1, lambda: lib.fjpg_encode(pp, w, h, tp, op, out.size),
+         codec._encode_fjpg_pure,
+         lambda b: lib.fjpg_decode(b, len(b), dec.ctypes.data, n),
+         fjpg_decode_pure),
+        (2, lambda: lib.bmp_encode(pp, w, h, op, out.size),
+         codec.encode_bmp,
+         lambda b: lib.bmp_decode(b, len(b), dec.ctypes.data, n,
+                                  meta.ctypes.data),
+         codec.decode_bmp),
+    )
+    for code, c_enc, enc, c_dec, pure_dec in legs:
+        ln = c_enc()
+        blob = enc(px)
+        if ln <= 0 or out[:ln].tobytes() != blob:
+            return False
+        px1 = pure_dec(blob)
+        if c_dec(blob) != 0 or not np.array_equal(dec, px1):
+            return False
+        reblob = enc(px1)
+        px2 = pure_dec(reblob)
+        want_ssd = int(((px1.astype(np.int64) - px2) ** 2).sum())
+        if (lib.reencode_pipeline(pp, w, h, code, tp, op, out2.ctypes.data,
+                                  out.size, res, ssd) != 0
+                or (res[0], res[1]) != (len(blob), len(reblob))
+                or bool(res[2]) != np.array_equal(px1, px2)
+                or (not res[2] and ssd[0] != want_ssd)):
+            return False
     return True
 
 

@@ -12,10 +12,16 @@ Invariants enforced (BASELINE.json north_star / FIXTURES.md §4):
 * captions byte-for-byte untouched;
 * per-(cell, fmt) row counts preserved.
 
-Scale notes: the shuffle key is ``cell_id`` (optionally salted with the
-``salt`` column for hot cells — pass ``salt_hot=True``); payload bytes
-cross the shuffle exactly once, which is unavoidable for a per-tile
-re-encode. The metrics output is tiny (one row per cell×fmt).
+Scale notes:
+* ``tile_reencode_metrics`` / ``mosaic_tiles`` shuffle stored payloads on
+  ``cell_id`` (optionally salted with the ``salt`` column for hot cells —
+  pass ``salt_hot=True``); payload bytes cross the shuffle exactly once,
+  which is unavoidable for a per-tile re-encode of stored images.
+* ``synth_reencode_metrics`` has one shape at every scale: one Arrow
+  stage does the codec work image by image over evenly spread skinny
+  rows, and the JVM folds images into (cell, salt, fmt) rows. No tile
+  group reaches Python, so a hot cell costs no straggler task.
+* The metrics output is tiny (one row per cell×fmt).
 """
 
 from __future__ import annotations
@@ -24,11 +30,12 @@ import hashlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from libgeodesk_spark.media import codec
+from libgeodesk_spark.sources.images import SIZES, caption_col
 
 METRICS_SCHEMA = T.StructType([
     T.StructField("cell_id", T.LongType(), False),
@@ -112,29 +119,43 @@ def tile_reencode_metrics(images: DataFrame, salt_hot: bool = False) -> DataFram
     return images.groupBy(*keys).applyInPandas(agg, schema=METRICS_SCHEMA)
 
 
-def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Per-(cell, salt) group body of :func:`synth_reencode_metrics` —
-    module-level so the loop is unit-testable and keeps warm module
-    state across reused Python workers.
+#: per-image output of the codec stage of :func:`synth_reencode_metrics`
+_IMAGE_METRICS_SCHEMA = T.StructType([
+    T.StructField("cell_id", T.LongType(), False),
+    T.StructField("salt", T.LongType(), False),
+    T.StructField("fmt", T.StringType(), False),
+    T.StructField("pid", T.LongType(), False),
+    T.StructField("bytes_in", T.LongType(), False),
+    T.StructField("bytes_out", T.LongType(), False),
+    T.StructField("psnr", T.DoubleType(), False),       # inf allowed
+])
 
-    r6 loop shape (same outputs, less per-image Python): fmt_for/size_for
-    are evaluated as vectorized numpy expressions (4:4:2 png/jpeg/bmp,
-    SIZES by pid//7, //11 — the exact sources/images.py formulas); the
-    per-fmt image order comes from an int64 argsort of pid, which equals
-    the image_id string order because image_id is 'img%012d' % pid in
-    this synthetic table (captions are likewise derived from pid)."""
-    from libgeodesk_spark.sources.images import SIZES, caption_for
+#: fmt code order of :func:`synth_image_metrics` (codes as in the C kernel)
+_FMT_BY_CODE = np.array(["png", "jpeg", "bmp"], dtype=object)
 
+
+def synth_image_metrics(pids) -> tuple[np.ndarray, ...]:
+    """Per-image body of :func:`synth_reencode_metrics`: for every pid,
+    synthesize its payload and run encode → decode → re-encode → decode →
+    compare. Returns ``(fmt_code, bytes_in, bytes_out, psnr)`` arrays
+    aligned with ``pids``; fmt_code indexes ("png", "jpeg", "bmp") and an
+    exact round trip has psnr = inf.
+
+    fmt_for/size_for are evaluated as vectorized numpy expressions (4:4:2
+    png/jpeg/bmp, SIZES by pid//7, //11 — the sources/images.py
+    formulas). With the C kernel loaded the whole leg is one fused call
+    per image; an image the kernel refuses falls back to the pure codec
+    calls, which are authoritative."""
     size_lut = np.asarray(SIZES, dtype=np.int64)
-    rows = []
-    # numpy views once — .iloc per element costs microseconds/row,
-    # which is real money at 10^5 rows/partition
-    pids = pdf["pid"].to_numpy().astype("int64")
-    order = np.argsort(pids, kind="stable")
+    pids = np.asarray(pids, dtype=np.int64)
     r10 = pids % 10
-    fmt_code = np.where(r10 < 4, 0, np.where(r10 < 8, 1, 2))
+    codes = np.where(r10 < 4, 0, np.where(r10 < 8, 1, 2))
     ws = size_lut[(pids // 7) % 3]
     hs = size_lut[(pids // 11) % 3]
+    n = len(pids)
+    bytes_in = np.empty(n, dtype=np.int64)
+    bytes_out = np.empty(n, dtype=np.int64)
+    psnrs = np.empty(n, dtype=np.float64)
     enc, dec, psnr = codec.encode, codec.decode, codec.psnr
     synth = codec.synth_pixels
     lib = codec._fc()
@@ -148,198 +169,85 @@ def _synth_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
         buf2 = codec._scratch("pipe_b2", nmax + (nmax >> 6) + 4096)
         bufcap = min(buf1.size, buf2.size)
         pipeline = lib.reencode_pipeline
-    ordered_codes = fmt_code[order]
-    for code, fmt in ((2, "bmp"), (1, "jpeg"), (0, "png")):   # name order
-        sel = order[ordered_codes == code]
-        if not sel.size:
+    for i, (pid, w, h, code) in enumerate(zip(
+            pids.tolist(), ws.tolist(), hs.tolist(), codes.tolist())):
+        px0 = synth(pid, w, h)
+        # fused C leg: the same work, only the metrics cross the boundary
+        if lib is not None and pipeline(
+                px0.ctypes.data, w, h, code, ctmp.ctypes.data,
+                buf1.ctypes.data, buf2.ctypes.data, bufcap, res, ssd) == 0:
+            bytes_in[i] = res[0]
+            bytes_out[i] = res[1]
+            psnrs[i] = (float("inf") if res[2] else 10.0 * np.log10(
+                255.0 * 255.0 / (ssd[0] / (w * h * 3))))
             continue
-        sha = hashlib.sha256()
-        upd = sha.update
-        bytes_in = 0
-        bytes_out = 0
-        min_psnr = float("inf")
-        for pid, w, h in zip(pids[sel].tolist(), ws[sel].tolist(),
-                             hs[sel].tolist()):
-            if lib is not None:
-                # fused C leg: same encode->decode->re-encode->decode->
-                # compare work, only the metrics cross the boundary
-                px0 = synth(pid, w, h)
-                if pipeline(px0.ctypes.data, w, h, code, ctmp.ctypes.data,
-                            buf1.ctypes.data, buf2.ctypes.data, bufcap,
-                            res, ssd) == 0:
-                    if res[2]:
-                        p = float("inf")
-                    else:
-                        n3 = w * h * 3
-                        p = 10.0 * np.log10(255.0 * 255.0
-                                            / (ssd[0] / n3))
-                    if p < min_psnr:
-                        min_psnr = p
-                    bytes_in += res[0]
-                    bytes_out += res[1]
-                    upd(caption_for(pid).encode("utf-8"))
-                    upd(b"\x00")
-                    continue
-            blob = enc(synth(pid, w, h), fmt)
-            px, f = dec(blob)
-            out = enc(px, f)
-            px2, _ = dec(out)
-            p = psnr(px, px2)
-            if p < min_psnr:
-                min_psnr = p
-            bytes_in += len(blob)
-            bytes_out += len(out)
-            upd(caption_for(pid).encode("utf-8"))
-            upd(b"\x00")
-        rows.append({
-            "cell_id": int(pdf["cell_id"].iloc[0]),
-            "fmt": fmt,
-            "n_images": len(sel),
-            "bytes_in": bytes_in,
-            "bytes_out": bytes_out,
-            "min_psnr": 999.0 if min_psnr == float("inf") else min_psnr,
-            "caption_sha": sha.hexdigest(),
-        })
-    return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
+        blob = enc(px0, _FMT_BY_CODE[code])
+        px, f = dec(blob)
+        out = enc(px, f)
+        px2, _ = dec(out)
+        bytes_in[i] = len(blob)
+        bytes_out[i] = len(out)
+        psnrs[i] = psnr(px, px2)
+    return codes, bytes_in, bytes_out, psnrs
 
 
-_PARTIAL_SCHEMA = T.StructType([
-    T.StructField("cell_id", T.LongType(), False),
-    T.StructField("salt", T.LongType(), False),
-    T.StructField("fmt", T.StringType(), False),
-    T.StructField("n_images", T.LongType(), False),
-    T.StructField("bytes_in", T.LongType(), False),
-    T.StructField("bytes_out", T.LongType(), False),
-    T.StructField("min_psnr_raw", T.DoubleType(), False),  # inf allowed
-    T.StructField("pids", T.ArrayType(T.LongType(), False), False),
-])
+def _synth_image_batches(batches):
+    """mapInArrow body: one output row per input (pid, cell_id, salt)."""
+    import pyarrow as pa
+
+    for rb in batches:
+        pid = rb.column("pid")
+        codes, b_in, b_out, psnrs = synth_image_metrics(
+            pid.to_numpy(zero_copy_only=False))
+        yield pa.RecordBatch.from_arrays(
+            [rb.column("cell_id"), rb.column("salt"),
+             pa.array(_FMT_BY_CODE[codes], pa.string()), pid,
+             pa.array(b_in), pa.array(b_out), pa.array(psnrs)],
+            names=_IMAGE_METRICS_SCHEMA.names)
 
 
-def _synth_partial_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Sub-group codec pass of :func:`synth_reencode_metrics`: the full
-    per-image synth→encode→decode→re-encode→decode→compare work for one
-    (cell, salt, subkey) slice; emits associative partials plus the
-    slice's pid list (captions derive from pid, so the tiny merge stage
-    can rebuild the exact caption_sha without touching any payload)."""
-    full = _synth_group_metrics(pdf)
-    pids = pdf["pid"].to_numpy().astype("int64")
-    r10 = pids % 10
-    out = full.rename(columns={"min_psnr": "min_psnr_raw"})
-    out.insert(1, "salt", int(pdf["salt"].iloc[0]))
-    # undo the inf->999 mapping: merge needs the raw minimum
-    out["min_psnr_raw"] = out["min_psnr_raw"].map(
-        lambda v: float("inf") if v == 999.0 else v)
-    by_fmt = {"png": pids[r10 < 4], "jpeg": pids[(r10 >= 4) & (r10 < 8)],
-              "bmp": pids[r10 >= 8]}
-    out.pop("caption_sha")
-    out["pids"] = [by_fmt[f].tolist() for f in out["fmt"]]
-    return out[[f.name for f in _PARTIAL_SCHEMA.fields]]
+def caption_sha(pid: str) -> Column:
+    """Aggregate column: sha256 hex over ``caption_for(pid) + "\\x00"`` for
+    the group's pids in ascending order — the JVM form of the per-group
+    hashlib caption loop in :func:`tile_reencode_metrics`."""
+    captions = F.transform(F.array_sort(F.collect_list(pid)), caption_col)
+    return F.sha2(F.concat(F.array_join(captions, "\u0000"),
+                           F.lit("\u0000")), 256)
 
 
-def _synth_merge_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Merge stage of :func:`synth_reencode_metrics`: sums/mins are
-    associative; caption_sha is rebuilt from the union of pid lists in
-    image_id order ('img%012d' % pid ordering == pid order), exactly the
-    digest the single-pass formulation produces. No codec work here."""
-    from libgeodesk_spark.sources.images import caption_for
-    rows = []
-    cell = int(pdf["cell_id"].iloc[0])
-    for fmt, grp in pdf.groupby("fmt", sort=True):
-        pids: list[int] = []
-        for lst in grp["pids"]:
-            pids.extend(lst)
-        pids.sort()
-        sha = hashlib.sha256()
-        upd = sha.update
-        for pid in pids:
-            upd(caption_for(pid).encode("utf-8"))
-            upd(b"\x00")
-        mn = float(grp["min_psnr_raw"].min())
-        rows.append({
-            "cell_id": cell,
-            "fmt": fmt,
-            "n_images": int(grp["n_images"].sum()),
-            "bytes_in": int(grp["bytes_in"].sum()),
-            "bytes_out": int(grp["bytes_out"].sum()),
-            "min_psnr": 999.0 if mn == float("inf") else mn,
-            "caption_sha": sha.hexdigest(),
-        })
-    return pd.DataFrame(rows, columns=[f.name for f in METRICS_SCHEMA.fields])
+def synth_reencode_metrics(points: DataFrame) -> DataFrame:
+    """Fused bench/pipeline variant of attach_payload →
+    tile_reencode_metrics(salt_hot=True): synthesize every payload and
+    re-encode it inside one Arrow stage, so payload bytes never cross a
+    shuffle. One output row per (cell_id, salt, fmt) group.
 
-
-#: sub-splits per (cell, salt) group in the codec stage: bounds the
-#: largest single task at hot_cell/(N_SALTS * SPLIT) of the table no
-#: matter the scale factor — at sf1 the 57k-image hot groups were 14-21 s
-#: straggler tasks that started late and stretched the stage wall ~25%
-SYNTH_SPLIT = 8
-
-#: optimizer-estimated input size above which the split + fine
-#: partitioning pay for themselves. Below it the per-group/per-task
-#: fixed costs dominate the straggler saving (measured at sf0.1/457k
-#: images: single-pass 2x-parallelism 8.4 s vs split 17.5 s; at
-#: sf1/4.57M images the split wins 59 s vs 68.5 s) — the estimate comes
-#: from parquet footer sizes via the logical plan, costing NO extra job,
-#: so the operator self-selects by data size instead of pinning either
-#: scale's constant (guide §2: scale-adaptive partitioning).
-SYNTH_SPLIT_MIN_BYTES = 64 << 20
-
-
-def _estimated_input_bytes(points: DataFrame) -> int:
-    try:
-        return int(points._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:
-        return 1 << 50                      # unknown -> assume large
-
-
-def synth_reencode_metrics(points: DataFrame,
-                           split: int | None = None) -> DataFrame:
-    """Fused bench/pipeline variant: shuffle only skinny point rows by
-    (cell_id, salt), then synthesize payloads AND compute re-encode
-    metrics inside one Arrow stage — for workloads whose payloads are
-    generated (or fetched) per tile, this avoids shuffling bytes at all.
-    Semantics identical to attach_payload → tile_reencode_metrics(salt_hot).
-
-    Large inputs run a two-level aggregation (guide §2.5, aggregation
-    salting): the codec work runs per (cell, salt, pid>>4 % split)
-    sub-slice so no single task holds a whole hot-cell salt group; a
-    merge stage re-aggregates the associative partials and rebuilds
-    caption_sha from pids — output rows byte-identical to the
-    single-pass formulation (tests/test_r06_opt.py asserts it). Small
-    inputs (optimizer size estimate under SYNTH_SPLIT_MIN_BYTES) skip
-    the split and the fine partitioning: their hot groups are already
-    sub-second and the two-level machinery would only add fixed costs.
-    ``split`` overrides the auto choice (1 = force single-pass)."""
+    Shape: the skinny (pid, cell_id, salt) rows are spread evenly over
+    ``defaultParallelism`` partitions, one ``mapInArrow`` stage runs the
+    per-image work (:func:`synth_image_metrics`) over whole Arrow batches
+    and emits one row per image, and a JVM ``groupBy(cell_id, salt,
+    fmt)`` folds the images into the metrics row. The sums and the min
+    are associative, and caption_sha is rebuilt in the JVM from the
+    group's pids in pid order (== image_id order, 'img%012d' % pid) with
+    :func:`~libgeodesk_spark.sources.images.caption_col`. No group ever
+    reaches Python, so work is balanced per image however skewed the
+    cells are."""
     par = points.sparkSession.sparkContext.defaultParallelism
-    if split is None:
-        big = _estimated_input_bytes(points) >= SYNTH_SPLIT_MIN_BYTES
-        split = SYNTH_SPLIT if big else 1
     # project to the three columns the codec stage reads BEFORE the
-    # exchange (guide §2.3): x/y/phash/image_id would otherwise be
-    # shuffled and arrow->pandas-materialized (millions of python
-    # strings) just to be dropped
-    skinny = points.select("pid", "cell_id", "salt")
-    # explicit hash repartition on the group keys: the shuffle input is
-    # skinny (tens of MB), so AQE would coalesce to ~2 partitions and
-    # serialize the per-group codec work; a fixed-width HashPartitioning on
-    # the same keys satisfies applyInPandas' distribution requirement with
-    # no extra exchange and is exempt from AQE coalescing.
-    if split <= 1:
-        return skinny.repartition(par * 2, "cell_id", "salt") \
-            .groupBy("cell_id", "salt") \
-            .applyInPandas(_synth_group_metrics, schema=METRICS_SCHEMA)
-    # 16 tasks/core: with the sub-split bounding every group at a few
-    # seconds, fine partitions cost nothing and cut the last-wave tail
-    # from ~p90-task-size to ~avg-task-size (measured 66s -> 56s at sf1;
-    # task p50 was 12.5s / max 22s in 4 waves at 4 tasks/core)
-    sub = F.shiftright(F.col("pid"), 4) % split        # independent of salt
-    partials = (skinny.withColumn("_sub", sub)
-                .repartition(par * 16, "cell_id", "salt", "_sub")
-                .groupBy("cell_id", "salt", "_sub")
-                .applyInPandas(_synth_partial_metrics,
-                               schema=_PARTIAL_SCHEMA))
-    return partials.groupBy("cell_id", "salt") \
-        .applyInPandas(_synth_merge_metrics, schema=METRICS_SCHEMA)
+    # exchange. A round-robin repartition by number is exempt from AQE
+    # coalescing, which would pack the skinny input into a few
+    # partitions and serialize the codec work
+    per_image = points.select("pid", "cell_id", "salt").repartition(par) \
+        .mapInArrow(_synth_image_batches, schema=_IMAGE_METRICS_SCHEMA)
+    mn = F.col("min_psnr")
+    return per_image.groupBy("cell_id", "salt", "fmt").agg(
+        F.count(F.lit(1)).alias("n_images"),
+        F.sum("bytes_in").alias("bytes_in"),
+        F.sum("bytes_out").alias("bytes_out"),
+        F.min("psnr").alias("min_psnr"),
+        caption_sha("pid").alias("caption_sha"),
+    ).select("cell_id", "fmt", "n_images", "bytes_in", "bytes_out",
+             F.when(mn == float("inf"), 999.0).otherwise(mn)
+             .alias("min_psnr"), "caption_sha")
 
 
 def mosaic_tiles(images: DataFrame, tile_px: int = 64,

@@ -15,7 +15,7 @@ byte-equality invariant is stressed.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,6 +42,13 @@ IMAGE_SCHEMA = T.StructType([
 
 def caption_for(pid: int) -> str:
     return f'caption {pid} — café "№{pid % 97}"'
+
+
+def caption_col(pid: Column) -> Column:
+    """:func:`caption_for` as a JVM Column expression (pmod = Python's %)."""
+    return F.concat(F.lit("caption "), pid.cast("string"),
+                    F.lit(' — café "№'), F.pmod(pid, F.lit(97)).cast("string"),
+                    F.lit('"'))
 
 
 def fmt_for(pid: int) -> str:

@@ -7,17 +7,22 @@ restructured for speed — these tests pin the outputs bit-for-bit.
   before it can reach the driver;
 * randomized forward-filter -> _png_defilter round-trip over all five
   PNG filter types (the serial Average/Paeth loop was rewritten);
-* _synth_group_metrics (the applyInPandas body behind the tile_reencode
-  bench leg) against a straightforward reference implementation.
+* synth_reencode_metrics (the tile_reencode bench leg) and its per-image
+  body against a straightforward reference implementation, on both codec
+  paths, plus the operator's plan shape.
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
+import stat
+import sys
 
 import numpy as np
 import pandas as pd
 import pytest
+from pyspark import cloudpickle
 
 from libgeodesk_spark.media import codec
 from libgeodesk_spark.sources.images import caption_for, fmt_for, size_for
@@ -145,6 +150,18 @@ class TestDefilterRandomized:
             codec._png_defilter(raw, 3, 1, 3)
 
 
+def _reference_image_metrics(pid: int) -> tuple[str, int, int, float]:
+    """(fmt, bytes_in, bytes_out, psnr) of one synthesized image, through
+    the granular codec calls."""
+    fmt = fmt_for(pid)
+    w, h = size_for(pid)
+    blob = codec.encode(codec.synth_pixels(pid, w, h), fmt)
+    px, f = codec.decode(blob)
+    out = codec.encode(px, f)
+    px2, _ = codec.decode(out)
+    return fmt, len(blob), len(out), codec.psnr(px, px2)
+
+
 def _reference_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
     """The straightforward (r5) formulation of the synth re-encode group
     body: per-image fmt_for/size_for, image_id string sort."""
@@ -162,14 +179,10 @@ def _reference_group_metrics(pdf: pd.DataFrame) -> pd.DataFrame:
         min_psnr = float("inf")
         for pos in by_fmt[fmt]:
             pid = int(pids[pos])
-            w, h = size_for(pid)
-            blob = codec.encode(codec.synth_pixels(pid, w, h), fmt)
-            px, f = codec.decode(blob)
-            out = codec.encode(px, f)
-            px2, _ = codec.decode(out)
-            min_psnr = min(min_psnr, codec.psnr(px, px2))
-            bytes_in += len(blob)
-            bytes_out += len(out)
+            _, b_in, b_out, p = _reference_image_metrics(pid)
+            min_psnr = min(min_psnr, p)
+            bytes_in += b_in
+            bytes_out += b_out
             sha.update(caption_for(pid).encode("utf-8"))
             sha.update(b"\x00")
         rows.append({"cell_id": int(pdf["cell_id"].iloc[0]), "fmt": fmt,
@@ -278,43 +291,183 @@ class TestAdviceR5Fixes:
             _flac.decode_flac(bytes(blob))
 
 
-class TestSynthSplitMerge:
-    def test_split_path_equals_single_pass(self, spark, sf_dir):
-        """The two-level (partial + merge) formulation must emit rows
-        byte-identical to one applyInPandas group per (cell, salt)."""
+def _plan_nodes(plan) -> list[str]:
+    """Class names of the executed plan's nodes, through AQE wrappers."""
+    out = []
+
+    def walk(p):
+        cls = p.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            return walk(p.executedPlan())
+        if cls.endswith("QueryStageExec"):
+            return walk(p.plan())
+        out.append(cls)
+        ch = p.children().iterator()
+        while ch.hasNext():
+            walk(ch.next())
+
+    walk(plan)
+    return out
+
+
+@pytest.fixture(params=["c", "pure"])
+def codec_path(request, spark):
+    """Python workers with the C kernel loaded, or forced onto the pure
+    path: the worker env is part of the Python worker key, so the pure
+    runs get workers of their own."""
+    env = spark.sparkContext.environment
+    if request.param == "pure":
+        env["LIBGEODESK_NO_FASTCODEC"] = "1"
+    yield request.param
+    env.pop("LIBGEODESK_NO_FASTCODEC", None)
+
+
+class TestSynthReencodeOperator:
+    def test_matches_reference_groups(self, spark, sf_dir, codec_path):
+        """The per-image mapInArrow stage + JVM aggregate emits the rows of
+        one reference group body per (cell, salt), on both codec paths."""
         from libgeodesk_spark.operators.tileagg import (
             METRICS_SCHEMA,
-            _synth_group_metrics,
             synth_reencode_metrics,
         )
         from libgeodesk_spark.sources.points import derived_points
+        # the Python workers cannot import this test module
+        cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+        def kernel_loaded(it):
+            from libgeodesk_spark.media import codec as c
+            for pdf in it:
+                yield pdf.assign(c=c._fc() is not None)[["c"]]
+
         pts = derived_points(spark, sf_dir)
-        # force the split regime (the auto heuristic would pick
-        # single-pass at gate scale, which is the comparison baseline)
-        split = synth_reencode_metrics(pts, split=8).toPandas() \
-            .sort_values(["cell_id", "fmt", "caption_sha"]).reset_index(drop=True)
-        single = (pts.repartition(8, "cell_id", "salt")
-                  .groupBy("cell_id", "salt")
-                  .applyInPandas(_synth_group_metrics, schema=METRICS_SCHEMA)
-                  .toPandas()
-                  .sort_values(["cell_id", "fmt", "caption_sha"]).reset_index(drop=True))
-        # per (cell, salt, fmt) rows: compare the full aggregate multiset
-        assert len(split) == len(single)
-        pd.testing.assert_frame_equal(split, single)
+        loaded = {r.c for r in pts.limit(8).mapInPandas(
+            kernel_loaded, "c boolean").collect()}
+        if codec_path == "pure":
+            assert loaded == {False}
+        elif codec._fc() is not None:              # the kernel builds here
+            assert loaded == {True}
+        keys = ["cell_id", "fmt", "caption_sha"]
+        got = synth_reencode_metrics(pts).toPandas() \
+            .sort_values(keys).reset_index(drop=True)
+        want = (pts.groupBy("cell_id", "salt")
+                .applyInPandas(_reference_group_metrics, schema=METRICS_SCHEMA)
+                .toPandas().sort_values(keys).reset_index(drop=True))
+        assert len(got) == len(want) > 0
+        pd.testing.assert_frame_equal(got, want)
+
+    def test_plan_shape(self, spark, sf_dir):
+        """One Python node (the per-image MapInArrow); every group is
+        folded in the JVM; no sort-merge, Cartesian or row-at-a-time
+        Python plans."""
+        from libgeodesk_spark.operators.tileagg import synth_reencode_metrics
+        from libgeodesk_spark.sources.points import derived_points
+        df = synth_reencode_metrics(derived_points(spark, sf_dir))
+        df.collect()
+        nodes = _plan_nodes(df._jdf.queryExecution().executedPlan())
+        python = [n for n in nodes
+                  if any(k in n for k in ("Python", "Pandas", "InArrow"))]
+        assert python == ["MapInArrowExec"], nodes
+        for bad in ("FlatMapGroupsInPandas", "SortMergeJoin",
+                    "CartesianProduct", "BatchEvalPython"):
+            assert not any(bad in n for n in nodes), (bad, nodes)
 
 
 class TestSynthGroupMetrics:
     @pytest.mark.parametrize("n", [1, 17, 800])
-    def test_matches_reference(self, n):
-        from libgeodesk_spark.operators.tileagg import _synth_group_metrics
+    def test_matches_reference(self, n, monkeypatch):
+        """The per-image body equals the granular codec calls image by
+        image, with the C kernel and on the pure path."""
+        from libgeodesk_spark.operators.tileagg import synth_image_metrics
         rng = np.random.default_rng(n)
         pids = rng.choice(500_000, size=n, replace=False).astype("int64")
-        pdf = pd.DataFrame({
-            "pid": pids,
-            "image_id": [f"img{p:012d}" for p in pids],
-            "cell_id": np.full(n, 201326592 + 1234, dtype="int64"),
-            "salt": pids % 16,
-        })
-        a = _reference_group_metrics(pdf)
-        b = _synth_group_metrics(pdf)
-        pd.testing.assert_frame_equal(a, b)
+        want = [_reference_image_metrics(int(p)) for p in pids]
+        for pure in (False, True):
+            if pure:
+                monkeypatch.setattr(codec, "_fc", lambda: None)
+            codes, b_in, b_out, psnrs = synth_image_metrics(pids)
+            got = [(("png", "jpeg", "bmp")[c], i, o, p) for c, i, o, p in
+                   zip(codes.tolist(), b_in.tolist(), b_out.tolist(),
+                       psnrs.tolist())]
+            assert got == want, pure
+
+
+class TestFastcodecHardening:
+    def _so_path(self, d) -> str:
+        from libgeodesk_spark.media import _fastcodec
+        tag = hashlib.sha256(_fastcodec.C_SOURCE.encode()).hexdigest()[:16]
+        return os.path.join(str(d), f"libgeodesk_fastcodec_{tag}.so")
+
+    def _fresh_load(self, monkeypatch, d):
+        from libgeodesk_spark.media import _fastcodec
+        monkeypatch.setenv("SPARK_GRAFT_FASTCODEC_DIR", str(d))
+        monkeypatch.delenv("LIBGEODESK_NO_FASTCODEC", raising=False)
+        monkeypatch.setattr(_fastcodec, "_lib", None)
+        return _fastcodec.load()
+
+    def test_group_writable_cached_so_refused(self, tmp_path, monkeypatch):
+        so = self._so_path(tmp_path)
+        with open(so, "wb") as f:
+            f.write(b"not a shared object")
+        os.chmod(so, 0o775)
+        assert self._fresh_load(monkeypatch, tmp_path) is None
+        with open(so, "rb") as f:                  # refused, not rebuilt
+            assert f.read() == b"not a shared object"
+
+    @pytest.mark.skipif(not hasattr(os, "geteuid") or os.geteuid() != 0,
+                        reason="chown to another uid needs root")
+    def test_foreign_owned_cached_so_refused(self, tmp_path, monkeypatch):
+        so = self._so_path(tmp_path)
+        with open(so, "wb") as f:
+            f.write(b"not a shared object")
+        os.chmod(so, 0o755)
+        os.chown(so, os.getuid() + 4242, -1)
+        assert self._fresh_load(monkeypatch, tmp_path) is None
+
+    def test_fresh_build_is_private_and_loads(self, tmp_path, monkeypatch):
+        import shutil
+        if shutil.which(os.environ.get("CC", "cc")) is None:
+            pytest.skip("no C compiler on this host")
+        old = os.umask(0o002)                  # a group-writable umask
+        try:
+            lib = self._fresh_load(monkeypatch, tmp_path)
+        finally:
+            os.umask(old)
+        assert lib is not None
+        mode = os.stat(self._so_path(tmp_path)).st_mode
+        assert not mode & (stat.S_IWGRP | stat.S_IWOTH)
+
+    def test_default_cache_dir_is_per_uid_0700(self, tmp_path, monkeypatch):
+        import tempfile
+
+        from libgeodesk_spark.media import _fastcodec
+        monkeypatch.delenv("SPARK_GRAFT_FASTCODEC_DIR", raising=False)
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        d = _fastcodec._cache_dir()
+        assert os.path.dirname(d) == str(tmp_path)
+        assert str(os.getuid()) in os.path.basename(d)
+        st = os.stat(d)
+        assert st.st_uid == os.getuid()
+        assert stat.S_IMODE(st.st_mode) == 0o700
+        os.chmod(d, 0o777)                         # loosened -> re-tightened
+        assert stat.S_IMODE(os.stat(_fastcodec._cache_dir()).st_mode) == 0o700
+
+    def test_self_test_checks_pipeline(self):
+        """The load-time self-test rejects a kernel whose fused pipeline
+        disagrees with the pure path."""
+        from libgeodesk_spark.media import _fastcodec
+        lib = codec._fc()
+        if lib is None:
+            pytest.skip("C kernel not loaded")
+        assert _fastcodec._self_test(lib)
+
+        class Lying:
+            def __getattr__(self, name):
+                return getattr(lib, name)
+
+            @staticmethod
+            def reencode_pipeline(*args):
+                rc = lib.reencode_pipeline(*args)
+                args[8][1] += 1                  # res[1]: bytes_out
+                return rc
+
+        assert not _fastcodec._self_test(Lying())

@@ -279,6 +279,28 @@ class TestImagesSource:
         caps = images.limit(5).select("caption").collect()
         assert all("café" in r.caption and "№" in r.caption for r in caps)
 
+    def test_caption_col_jvm_digest(self, spark):
+        """caption_col is caption_for in the JVM, and the operator's JVM
+        caption_sha (NUL-joined, pid order) equals the hashlib digest —
+        over the non-ASCII bytes '—', 'é', '№' and pids past 2**32."""
+        import hashlib
+
+        from pyspark.sql import functions as F
+
+        from libgeodesk_spark.operators.tileagg import caption_sha
+        from libgeodesk_spark.sources.images import caption_col, caption_for
+        pids = [2**40 + 96, 97, 0, 96, 2**32 + 5, 12345, 2**32 - 1, 7]
+        df = spark.createDataFrame([(p,) for p in pids], "pid bigint")
+        got = {r.pid: r.c for r in
+               df.select("pid", caption_col(F.col("pid")).alias("c"))
+               .collect()}
+        assert got == {p: caption_for(p) for p in pids}
+        sha = hashlib.sha256()
+        for p in sorted(pids):
+            sha.update(caption_for(p).encode("utf-8") + b"\x00")
+        jvm = df.agg(caption_sha("pid").alias("s")).collect()[0].s
+        assert jvm == sha.hexdigest()
+
 
 class TestTileAgg:
     def test_reencode_preserves(self, images):
