@@ -24,12 +24,30 @@ raster-interval approximation for polygon joins in the public literature
 (Raster Intervals, SIGMOD 2023; Raptor's raster-vector co-processing,
 VLDB 2019) — here with an exact refinement step instead of approximation.
 
-Cell classification is exact: a cell is BOUNDARY iff some edge intersects
-the (closed) cell box — via the separating-line test — else its corner
-parity decides INSIDE/OUTSIDE (same result as the reference's
-``locateBox``: box-boundary intersection, corner locate, contained-chain
-check, MCIndex.cpp:193-207; an edge inside the box is caught by the
-bbox-overlap arm of the test).
+Cell classification is exact, and built in whole-array int64 numpy in
+O(Σ edge bbox cells + cover cells), not O(cells × edges):
+
+* BOUNDARY: a cell is BOUNDARY iff some edge touches its closed box.
+  Every edge's bbox cover is expanded at once (in bounded chunks) and
+  each candidate keeps the separating-line test: the edge misses the box
+  iff all 4 corners lie strictly on one side of its line (same result as
+  the reference's ``locateBox``: box-boundary intersection, corner
+  locate, contained-chain check, MCIndex.cpp:193-207; an edge inside the
+  box is caught by the bbox-overlap arm of the test).
+* INSIDE / OUTSIDE: a cell no edge touches contains no boundary point,
+  so the crossing parity of its bottom-left corner decides it. All
+  corners of a cover row share one y, so the east ray of every corner in
+  the row crosses a given edge iff the corner's x is at most one integer
+  threshold ``T`` per (edge, row) — ``kernel.locate_points``' half-open
+  rule (``low_y <= y < high_y`` and strictly west of the edge) solved
+  for x with an exact int64 ceiling division. A histogram of thresholds
+  per row and a suffix sum give every corner's crossing count at once.
+
+Why per-corner parity and not one locate per run of adjacent non-boundary
+cells: neighbouring closed integer boxes leave a 1-unit gap between
+them, and an edge with integer endpoints can pass through that gap
+touching neither box, so two adjacent non-boundary cells can still
+differ in class.
 """
 
 from __future__ import annotations
@@ -39,13 +57,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from libgeodesk_spark.geom import kernel
-from libgeodesk_spark.mercator import (
-    MAX_ZOOM,
-    cell_bounds,
-    cell_from_col_row,
-    col_from_x,
-    row_from_y,
-)
+from libgeodesk_spark.mercator import col_from_x, row_from_y
 
 INSIDE = 1
 BOUNDARY = 0
@@ -106,42 +118,6 @@ def rings_to_edges(rings: list[np.ndarray]) -> np.ndarray:
     if not chunks:
         return np.zeros((0, 4), dtype=np.int64)
     return np.vstack(chunks)
-
-
-def _segment_intersects_cells(ax, ay, bx, by, zoom) -> set[tuple[int, int]]:
-    """Exact set of (col,row) cells whose closed box the segment touches.
-
-    For each cell in the segment's bbox cover, the segment misses the box
-    iff all 4 box corners lie strictly on one side of the segment's line
-    (given the bbox already overlaps). Vectorized over candidate cells.
-    """
-    c0, c1 = sorted((int(col_from_x(ax, zoom)), int(col_from_x(bx, zoom))))
-    r0, r1 = sorted((int(row_from_y(ay, zoom)), int(row_from_y(by, zoom))))
-    cols = np.arange(c0, c1 + 1, dtype=np.int64)
-    rows = np.arange(r0, r1 + 1, dtype=np.int64)
-    cc, rr = np.meshgrid(cols, rows)
-    cc, rr = cc.ravel(), rr.ravel()
-    if len(cc) == 1:
-        return {(int(cc[0]), int(rr[0]))}
-    # cell boxes (inclusive coords)
-    ext = np.int64(1) << (32 - zoom)
-    min_x = (cc << (32 - zoom)) - (1 << 31)
-    max_y = np.int64(2**31 - 1) - (rr << (32 - zoom))
-    max_x = min_x + ext - 1
-    min_y = max_y - ext + 1
-    dx, dy = bx - ax, by - ay
-    # side of each corner relative to the segment line (int64-exact:
-    # deltas bounded by the segment bbox which is < MAX_ZONE_SPAN)
-    s1 = np.sign(dx * (min_y - ay) - dy * (min_x - ax))
-    s2 = np.sign(dx * (min_y - ay) - dy * (max_x - ax))
-    s3 = np.sign(dx * (max_y - ay) - dy * (min_x - ax))
-    s4 = np.sign(dx * (max_y - ay) - dy * (max_x - ax))
-    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
-    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
-    # bbox overlap with the segment bbox (cells come from the bbox cover,
-    # but the cover is in cell units so it is already exact)
-    hit = ~(all_pos | all_neg)
-    return {(int(c), int(r)) for c, r in zip(cc[hit], rr[hit])}
 
 
 #: finest cover granularity the packed (col<<20|row) key supports; actual
@@ -224,7 +200,105 @@ def coarsen_cover(cover: dict[int, int], k: int) -> dict[int, int]:
     all_inside = np.logical_and.reduceat(v == INSIDE, starts)
     full = counts == (1 << (2 * k))
     out_vals = np.where(full & all_inside, INSIDE, BOUNDARY)
-    return {int(c): int(x) for c, x in zip(ck[starts], out_vals)}
+    return dict(zip(ck[starts].tolist(), out_vals.tolist()))
+
+
+#: candidate (edge, cell) / (edge, row) pairs expanded per numpy pass:
+#: bounds prepare_zone's temporaries (~a dozen int64 arrays of this
+#: length) however many long edges a zone has
+_EXPAND_CHUNK = 1 << 18
+
+
+def _expand(counts: np.ndarray):
+    """Enumerate every pair (i, j), 0 <= j < counts[i], in chunks of at
+    most _EXPAND_CHUNK pairs: yields (owner i, local j) int64 arrays. One
+    owner may span several chunks, so a single huge edge is chunked too."""
+    ends = np.cumsum(counts)
+    total = int(ends[-1]) if len(ends) else 0
+    for g0 in range(0, total, _EXPAND_CHUNK):
+        g = np.arange(g0, min(g0 + _EXPAND_CHUNK, total), dtype=np.int64)
+        owner = np.searchsorted(ends, g, side="right")
+        yield owner, g - (ends[owner] - counts[owner])
+
+
+def _boundary_cells(edges: np.ndarray, zoom: int, c0: int, r0: int,
+                    n_cols: int) -> np.ndarray:
+    """Grid indices ``(row - r0) * n_cols + (col - c0)`` of every cell
+    whose closed box some edge touches (duplicates allowed).
+
+    Each edge's candidates are the cells of its bbox cover; a candidate
+    is missed iff all 4 box corners lie strictly on one side of the
+    edge's line (the bbox overlap is given by construction; a zero-length
+    edge has all-zero signs, so its one cell is hit). Cross products
+    are int64-exact: corner deltas are < 2^32 (int32 coordinates) and
+    edge deltas < MAX_ZONE_SPAN = 2^30."""
+    ax, ay, bx, by = edges.T
+    shift = 32 - zoom
+    ext = np.int64(1) << shift
+    ec0 = col_from_x(np.minimum(ax, bx), zoom)
+    ec1 = col_from_x(np.maximum(ax, bx), zoom)
+    er0 = row_from_y(np.maximum(ay, by), zoom)
+    er1 = row_from_y(np.minimum(ay, by), zoom)
+    n_rows = er1 - er0 + 1
+    n_cells = (ec1 - ec0 + 1) * n_rows
+    dx, dy = bx - ax, by - ay
+    out = []
+    for e, j in _expand(n_cells):
+        cc = ec0[e] + j // n_rows[e]
+        rr = er0[e] + j % n_rows[e]
+        # closed cell box relative to the edge start (inclusive coords)
+        x0 = (cc << shift) - (1 << 31) - ax[e]
+        y1 = np.int64(2**31 - 1) - (rr << shift) - ay[e]
+        x1 = x0 + ext - 1
+        y0 = y1 - ext + 1
+        ex, ey = dx[e], dy[e]
+        s1 = ex * y0 - ey * x0
+        s2 = ex * y0 - ey * x1
+        s3 = ex * y1 - ey * x0
+        s4 = ex * y1 - ey * x1
+        all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
+        all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
+        hit = ~(all_pos | all_neg)
+        out.append((rr[hit] - r0) * n_cols + (cc[hit] - c0))
+    return np.concatenate(out) if out else np.zeros(0, dtype=np.int64)
+
+
+def _corner_parity(edges: np.ndarray, zoom: int, c0: int, r0: int,
+                   n_cols: int, n_rows: int) -> np.ndarray:
+    """(n_rows, n_cols) bool grid: odd east-ray crossing count at each
+    cell's bottom-left corner, under kernel.locate_points' rules.
+
+    All corners of cover row ``r`` share ``cy = 2^31 - ((r+1) << shift)``.
+    A non-horizontal edge (low end lx,ly; high end hx,hy) is crossed by
+    the ray from (cx, cy) iff ``ly <= cy < hy`` and cx lies strictly west
+    of the edge's x at cy, i.e. ``cx <= T`` with
+    ``T = lx + ceil((hx-lx)(cy-ly) / (hy-ly)) - 1`` — exact in int64
+    (numerator < 2^60 under MAX_ZONE_SPAN). Corners sit on a 2^shift
+    grid, so the edge crosses from every column ``c <= (T + 2^31) >>
+    shift``: one histogram entry per (edge, row) and a suffix sum along
+    the row count the crossings of every corner at once."""
+    shift = 32 - zoom
+    e = edges[edges[:, 1] != edges[:, 3]]
+    up = e[:, 1] < e[:, 3]
+    lx = np.where(up, e[:, 0], e[:, 2])
+    ly = np.where(up, e[:, 1], e[:, 3])
+    hx = np.where(up, e[:, 2], e[:, 0])
+    hy = np.where(up, e[:, 3], e[:, 1])
+    # rows r with ly <= cy(r) < hy, clipped to the cover's rows
+    lo = np.maximum(((1 << 31) - hy) >> shift, r0)
+    hi = np.minimum((((1 << 31) - ly) >> shift) - 1, r0 + n_rows - 1)
+    hist = np.zeros(n_rows * n_cols, dtype=np.int64)
+    for k, j in _expand(np.maximum(hi - lo + 1, 0)):
+        r = lo[k] + j
+        cy = (1 << 31) - ((r + 1) << shift)
+        num = (hx[k] - lx[k]) * (cy - ly[k])
+        t = lx[k] - ((-num) // (hy[k] - ly[k])) - 1
+        col = np.minimum(((t + (1 << 31)) >> shift) - c0, n_cols - 1)
+        ok = col >= 0
+        hist += np.bincount(((r - r0) * n_cols + col)[ok],
+                            minlength=len(hist))
+    crossings = np.cumsum(hist.reshape(n_rows, n_cols)[:, ::-1], axis=1)
+    return (crossings[:, ::-1] & 1).astype(bool)
 
 
 def prepare_zone(zone_id: str, rings: list[np.ndarray],
@@ -245,33 +319,15 @@ def prepare_zone(zone_id: str, rings: list[np.ndarray],
     if zoom is None:
         zoom = _fit_zoom(min_x, min_y, max_x, max_y)
 
-    boundary: set[tuple[int, int]] = set()
-    for ax, ay, bx, by in edges:
-        boundary |= _segment_intersects_cells(int(ax), int(ay), int(bx), int(by), zoom)
-
-    cover: dict[int, int] = {}
-    for col, row in boundary:
-        cover[int(pack_colrow(col, row))] = BOUNDARY
-
-    # remaining cells in the bbox cover: classify by bottom-left corner
-    # parity (vectorized — corner coordinates derive from col/row directly)
     c0, c1 = int(col_from_x(min_x, zoom)), int(col_from_x(max_x, zoom))
     r0, r1 = int(row_from_y(max_y, zoom)), int(row_from_y(min_y, zoom))
-    cols = np.arange(c0, c1 + 1, dtype=np.int64)
-    rows = np.arange(r0, r1 + 1, dtype=np.int64)
-    cc, rr = np.meshgrid(cols, rows)
-    cc, rr = cc.ravel(), rr.ravel()
-    if len(boundary):
-        bkeys = np.fromiter(((c << 20) | r for c, r in boundary),
-                            dtype=np.int64, count=len(boundary))
-        bmask = np.isin((cc << 20) | rr, bkeys)
-        cc, rr = cc[~bmask], rr[~bmask]
-    if len(cc):
-        shift = 32 - zoom
-        corner_x = (cc << shift) - (1 << 31)
-        corner_y = (np.int64(2**31 - 1) - (rr << shift)) - (1 << shift) + 1
-        loc = kernel.locate_points(corner_x, corner_y, edges)
-        inside = loc == kernel.INSIDE
-        for c, r in zip(cc[inside], rr[inside]):
-            cover[int(pack_colrow(c, r))] = INSIDE
+    n_cols, n_rows = c1 - c0 + 1, r1 - r0 + 1
+    # a cell no edge touches has no boundary point, so its bottom-left
+    # corner's crossing parity alone decides INSIDE / OUTSIDE
+    cls = np.where(_corner_parity(edges, zoom, c0, r0, n_cols, n_rows),
+                   INSIDE, OUTSIDE).astype(np.int8).ravel()
+    cls[_boundary_cells(edges, zoom, c0, r0, n_cols)] = BOUNDARY
+    idx = np.flatnonzero(cls != OUTSIDE)
+    keys = pack_colrow(c0 + idx % n_cols, r0 + idx // n_cols)
+    cover = dict(zip(keys.tolist(), cls[idx].tolist()))
     return PreparedZone(zone_id, edges, (min_x, min_y, max_x, max_y), zoom, cover)

@@ -248,6 +248,13 @@ class _BitReader:
                     while nxt == 0xFF and self.pos + 1 < len(self.data):
                         self.pos += 1
                         nxt = self.data[self.pos]
+                    if nxt in (0x00, 0xFF):
+                        # 0x00 is no marker code; 0xFF means the run hit
+                        # end-of-data: a corrupt stream, not padding
+                        raise ValueError(
+                            f"JPEG scan: 0xFF fill bytes followed by "
+                            f"{'0x00' if nxt == 0 else 'end of data'} "
+                            f"at byte {self.pos}")
                     self.pos += 1
                     self.marker = nxt        # real marker ends the segment
                     continue

@@ -769,6 +769,7 @@ def crossing_segments(segments: DataFrame, zones: list[PreparedZone],
     only that boundary band crosses into the Arrow kernel. Segments fully
     inside or fully outside never pay Python.
     """
+    from libgeodesk_spark.geom.zones import coarsen_cover
     from libgeodesk_spark.operators.way_join import (
         _zone_cells_coarse,
         fit_join_zoom,
@@ -793,7 +794,8 @@ def crossing_segments(segments: DataFrame, zones: list[PreparedZone],
         *segments.columns,
         (F.shiftleft(F.col("_cc"), 20) + F.col("_rr")).alias("cover_key"))
 
-    zc = _zone_cells_coarse(spark, zones, join_zoom) \
+    coarse = [coarsen_cover(z.cover, z.zoom - join_zoom) for z in zones]
+    zc = _zone_cells_coarse(spark, zones, coarse) \
         .filter(F.col("cover") == BOUNDARY).drop("cover")
     cand = tagged.join(F.broadcast(zc), "cover_key", "inner") \
         .dropDuplicates(segments.columns + ["zone_id"]).drop("cover_key")

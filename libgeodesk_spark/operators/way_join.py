@@ -51,6 +51,7 @@ from libgeodesk_spark.geom.zones import (
     BOUNDARY,
     INSIDE,
     PreparedZone,
+    coarsen_cover,
     rings_to_edges,
 )
 
@@ -74,25 +75,6 @@ def _row_of(y: np.ndarray, zoom: int) -> np.ndarray:
     return (np.int64(0x7FFFFFFF) - y.astype(np.int64)) >> (32 - zoom)
 
 
-def coarse_cover(zone: PreparedZone, join_zoom: int) -> dict[int, int]:
-    """Aggregate the fine cover up to ``join_zoom``: a coarse cell is
-    INSIDE iff all 4^d descendants are present and INSIDE (the whole cell
-    is then interior), else BOUNDARY if any descendant is present."""
-    d = zone.zoom - join_zoom
-    if d <= 0:
-        return dict(zone.cover)
-    full = 1 << (2 * d)
-    agg: dict[int, list[int]] = {}
-    for key, val in zone.cover.items():
-        col, row = key >> 20, key & 0xFFFFF
-        ck = int(_pack(np.int64(col >> d), np.int64(row >> d)))
-        st = agg.setdefault(ck, [0, 0])
-        st[0] += 1
-        st[1] += val == INSIDE
-    return {k: (INSIDE if (n == full and ni == full) else BOUNDARY)
-            for k, (n, ni) in agg.items()}
-
-
 def fit_join_zoom(zones: list[PreparedZone], max_way_span: int) -> int:
     """Coarsest-necessary join zoom: way bboxes of ``max_way_span`` units
     explode into <= MAX_JOIN_CELLS cells, and never finer than the zones'
@@ -106,12 +88,12 @@ def fit_join_zoom(zones: list[PreparedZone], max_way_span: int) -> int:
     return 0
 
 
-def _zone_cells_coarse(spark, zones: list[PreparedZone], join_zoom: int):
+def _zone_cells_coarse(spark, zones: list[PreparedZone],
+                       coarse: list[dict[int, int]]):
     import pandas as pd
     from pyspark.sql import types as T
     frames = []
-    for z in zones:
-        cov = coarse_cover(z, join_zoom)
+    for z, cov in zip(zones, coarse):
         frames.append(pd.DataFrame({
             "cover_key": np.fromiter(cov.keys(), dtype=np.int64, count=len(cov)),
             "zone_id": z.zone_id,
@@ -133,12 +115,12 @@ def way_bbox(ring_col):
     return (F.array_min(xs), F.array_min(ys), F.array_max(xs), F.array_max(ys))
 
 
-def _zone_payload(zones: list[PreparedZone], join_zoom: int) -> dict:
+def _zone_payload(zones: list[PreparedZone],
+                  coarse: list[dict[int, int]]) -> dict:
     """Per-zone broadcast payload for the kernel: edges + sorted fine-cover
     key arrays + the sorted coarse present/inside keys for dedup/turbo."""
     out = {}
-    for z in zones:
-        cov = coarse_cover(z, join_zoom)
+    for z, cov in zip(zones, coarse):
         ckeys = np.fromiter(cov.keys(), dtype=np.int64, count=len(cov))
         cvals = np.fromiter(cov.values(), dtype=np.int32, count=len(cov))
         order = np.argsort(ckeys)
@@ -228,10 +210,14 @@ def way_locate(ways: DataFrame, zones: list[PreparedZone],
         *id_cols, ring_col, is_area_col, "_bx0", "_by0", "_bx1", "_by1",
         (F.shiftleft(F.col("_cc"), 20) + F.col("_rr")).alias("cover_key"))
 
-    zc = _zone_cells_coarse(spark, zones, join_zoom)
+    # each zone's cover at the join zoom: INSIDE iff all 4^d fine
+    # children are present and INSIDE (coarsen_cover), built once for
+    # both the join's build side and the kernel's dedup/turbo payload
+    coarse = [coarsen_cover(z.cover, z.zoom - join_zoom) for z in zones]
+    zc = _zone_cells_coarse(spark, zones, coarse)
     cand = dup.join(F.broadcast(zc), "cover_key", "inner")
 
-    payload_bc = spark.sparkContext.broadcast(_zone_payload(zones, join_zoom))
+    payload_bc = spark.sparkContext.broadcast(_zone_payload(zones, coarse))
 
     in_schema = cand.schema
     id_idx = [in_schema.names.index(c) for c in id_cols]

@@ -8,12 +8,12 @@ mirrors that, and for the 3-zone gate — or even continent polygons — a
 driver loop is fine. A 10⁴–10⁵-zone CATALOG (every admin boundary on
 Earth) serializes that loop; this module is the scale path (VERDICT r3
 'What's missing' #3): one ``mapInPandas`` pass runs the SAME numpy
-kernels (``rings_to_edges``, ``_segment_intersects_cells``,
-``locate_points`` — bit-identical classification) per zone on executors,
+kernels (``rings_to_edges`` and the vectorized cover classification of
+``prepare_zone`` — bit-identical covers) per zone on executors,
 and the driver only DESERIALIZES the prepared artifacts it needs to
 assemble the broadcast interval table.
 
-Scale shape: prep cost is Σ per-zone (edges × cover cells) work,
+Scale shape: prep cost is Σ per-zone (edge bbox cells + cover cells) work,
 embarrassingly parallel over zones; a catalog repartitioned to the
 cluster width preps in (catalog size / executors) time. Skew (one
 continent among parishes) is bounded by the same `_fit_zoom` cover
@@ -137,7 +137,7 @@ def _deserialize(row) -> PreparedZone:
         .astype(np.int64).reshape(-1, 4)
     keys = np.frombuffer(bytes(row["cover_keys"]), dtype="<i8")
     vals = np.frombuffer(bytes(row["cover_vals"]), dtype=np.int8)
-    cover = {int(k): int(v) for k, v in zip(keys, vals)}
+    cover = dict(zip(keys.tolist(), vals.tolist()))
     return PreparedZone(row["zone_id"], edges,
                         (row["min_x"], row["min_y"],
                          row["max_x"], row["max_y"]),

@@ -407,6 +407,40 @@ class TestRestartAndErrors:
         with pytest.raises((ValueError, struct.error)):
             jpeg.decode_jpeg(blob[:40])     # cut inside a header segment
 
+    def test_fill_bytes_before_zero_raise(self):
+        """0xFF fill bytes followed by 0x00 are corrupt, not padding:
+        FF FF 00 mid-scan must raise instead of ending the scan."""
+        blob = jpeg.encode_jpeg(codec.synth_pixels(4, 32, 32), 90)
+        sos = blob.index(b"\xff\xda")
+        start = sos + 2 + struct.unpack(">H", blob[sos + 2:sos + 4])[0]
+        end = blob.rindex(b"\xff\xd9")
+        cut = next(i for i in range((start + end) // 2, end)
+                   if blob[i - 1] != 0xFF and blob[i] != 0xFF)
+        bad = blob[:cut] + b"\xff\xff\x00" + blob[cut:]
+        with pytest.raises(ValueError, match="fill bytes"):
+            jpeg.decode_jpeg(bad)
+        rd = jpeg._BitReader(b"\x12\xff\xff\xff\x00\x34", 0)
+        with pytest.raises(ValueError, match="0x00"):
+            rd.receive(16)
+
+    def test_trailing_fill_run_raises(self):
+        """A run of 0xFF that reaches the end of the data has no marker
+        code after it: raise rather than pad the scan with 1-bits."""
+        blob = jpeg.encode_jpeg(codec.synth_pixels(4, 32, 32), 90)
+        end = blob.rindex(b"\xff\xd9")
+        sos = blob.index(b"\xff\xda")
+        start = sos + 2 + struct.unpack(">H", blob[sos + 2:sos + 4])[0]
+        half = next(i for i in range((start + end) // 2, end)
+                    if blob[i - 1] != 0xFF)
+        with pytest.raises(ValueError, match="end of data"):
+            jpeg.decode_jpeg(blob[:half] + b"\xff\xff\xff")
+        rd = jpeg._BitReader(b"\x12\xff\xff", 0)
+        with pytest.raises(ValueError, match="end of data"):
+            rd.receive(16)
+        # a well-formed fill run before a real marker still decodes
+        padded = blob[:end] + b"\xff\xff\xff" + blob[end:]
+        assert np.array_equal(jpeg.decode_jpeg(padded), jpeg.decode_jpeg(blob))
+
     def test_not_a_jpeg(self):
         with pytest.raises(ValueError):
             jpeg.decode_jpeg(b"\x89PNG\r\n\x1a\n")

@@ -117,8 +117,8 @@ from pyspark.sql import functions as F
 
 from libgeodesk_spark.geom import kernel
 from libgeodesk_spark.geom.zones import rings_to_edges
+from libgeodesk_spark.geom.zones import coarsen_cover
 from libgeodesk_spark.operators.way_join import (
-    coarse_cover,
     rel_intersects,
     rel_within,
     way_locate,
@@ -212,7 +212,7 @@ def test_way_locate_multi_zone(random_ways_df):
 
 def test_coarse_cover_aggregation(comb_zone):
     for jz in (comb_zone.zoom - 2, comb_zone.zoom - 4, 10):
-        cov = coarse_cover(comb_zone, jz)
+        cov = coarsen_cover(comb_zone.cover, comb_zone.zoom - jz)
         assert cov, f"empty coarse cover at zoom {jz}"
         # every fine cell's ancestor must be present
         d = comb_zone.zoom - jz

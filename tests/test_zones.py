@@ -4,17 +4,24 @@ The cover is the distributed analog of the reference's acceptTile
 (WithinFilter.cpp:164-171): INSIDE cells turbo-accept, BOUNDARY cells run
 the kernel, absent cells are pruned. Invariant checked here: for any point,
 membership computed via (cover + kernel on boundary cells) equals the
-direct kernel answer.
+direct kernel answer. The differential tests further down pin the
+vectorized classifier to a per-edge, per-corner reference.
 """
 
 import numpy as np
+import pytest
 
 from libgeodesk_spark.geom import kernel
+from libgeodesk_spark.geom import zones as zones_mod
 from libgeodesk_spark.geom.zones import (
     BOUNDARY,
     INSIDE,
+    MAX_COVER_CELLS,
+    MAX_ZONE_SPAN,
+    OUTSIDE,
     pack_colrow,
     prepare_zone,
+    rings_to_edges,
 )
 from libgeodesk_spark.mercator import col_from_x, row_from_y
 
@@ -26,7 +33,7 @@ def ring(*pts):
     return np.array(pts, dtype=np.int64)
 
 
-CELL16 = 1 << 16  # zoom-16 cover cell extent (COVER_ZOOM default)
+CELL16 = 1 << 16  # zoom-16 cell extent, a round unit for test shapes (COVER_ZOOM is 20)
 
 
 def cover_of(z, x, y):
@@ -113,7 +120,6 @@ def test_custom_zoom():
 
 def test_adaptive_zoom_giant_zone():
     # a near-continent zone must get a coarser cover, bounded in size
-    from libgeodesk_spark.geom.zones import MAX_COVER_CELLS
     s = (1 << 28)   # span 2^29, inside the kernel contract
     z = prepare_zone("giant", [ring((-s, -s), (s, -s), (s, s), (-s, s))])
     assert z.zoom < 16
@@ -211,3 +217,219 @@ def test_interval_rle_matches_cover():
                 assert key not in rebuilt, "overlapping intervals"
                 rebuilt[key] = cv
     assert rebuilt == z.cover
+
+
+# --- differential: vectorized prepare_zone vs the per-edge reference -------
+
+
+def _reference_segment_cells(ax, ay, bx, by, zoom):
+    """Per-edge reference: (col,row) cells whose closed box the segment
+    touches — the edge's bbox cover minus cells with all 4 corners
+    strictly on one side of its line."""
+    c0, c1 = sorted((int(col_from_x(ax, zoom)), int(col_from_x(bx, zoom))))
+    r0, r1 = sorted((int(row_from_y(ay, zoom)), int(row_from_y(by, zoom))))
+    cc, rr = np.meshgrid(np.arange(c0, c1 + 1, dtype=np.int64),
+                         np.arange(r0, r1 + 1, dtype=np.int64))
+    cc, rr = cc.ravel(), rr.ravel()
+    if len(cc) == 1:
+        return {(int(cc[0]), int(rr[0]))}
+    ext = np.int64(1) << (32 - zoom)
+    min_x = (cc << (32 - zoom)) - (1 << 31)
+    max_y = np.int64(2**31 - 1) - (rr << (32 - zoom))
+    max_x = min_x + ext - 1
+    min_y = max_y - ext + 1
+    dx, dy = bx - ax, by - ay
+    s1 = np.sign(dx * (min_y - ay) - dy * (min_x - ax))
+    s2 = np.sign(dx * (min_y - ay) - dy * (max_x - ax))
+    s3 = np.sign(dx * (max_y - ay) - dy * (min_x - ax))
+    s4 = np.sign(dx * (max_y - ay) - dy * (max_x - ax))
+    all_pos = (s1 > 0) & (s2 > 0) & (s3 > 0) & (s4 > 0)
+    all_neg = (s1 < 0) & (s2 < 0) & (s3 < 0) & (s4 < 0)
+    hit = ~(all_pos | all_neg)
+    return {(int(c), int(r)) for c, r in zip(cc[hit], rr[hit])}
+
+
+def reference_prepare(rings, zoom=None):
+    """The per-edge, per-corner classifier: BOUNDARY cells edge by edge,
+    then every other bbox cell by ``kernel.locate_points`` on its
+    bottom-left corner. Returns (zoom, bbox, cover)."""
+    edges = rings_to_edges(rings)
+    min_x = int(min(edges[:, 0].min(), edges[:, 2].min()))
+    max_x = int(max(edges[:, 0].max(), edges[:, 2].max()))
+    min_y = int(min(edges[:, 1].min(), edges[:, 3].min()))
+    max_y = int(max(edges[:, 1].max(), edges[:, 3].max()))
+    if zoom is None:
+        zoom = zones_mod._fit_zoom(min_x, min_y, max_x, max_y)
+    boundary = set()
+    for ax, ay, bx, by in edges:
+        boundary |= _reference_segment_cells(int(ax), int(ay), int(bx),
+                                             int(by), zoom)
+    cover = {int(pack_colrow(c, r)): BOUNDARY for c, r in boundary}
+    c0, c1 = int(col_from_x(min_x, zoom)), int(col_from_x(max_x, zoom))
+    r0, r1 = int(row_from_y(max_y, zoom)), int(row_from_y(min_y, zoom))
+    cc, rr = np.meshgrid(np.arange(c0, c1 + 1, dtype=np.int64),
+                         np.arange(r0, r1 + 1, dtype=np.int64))
+    cc, rr = cc.ravel(), rr.ravel()
+    keep = ~np.isin(pack_colrow(cc, rr), np.array(list(cover), dtype=np.int64))
+    cc, rr = cc[keep], rr[keep]
+    shift = 32 - zoom
+    loc = kernel.locate_points((cc << shift) - (1 << 31),
+                               np.int64(2**31) - ((rr + 1) << shift), edges)
+    for c, r in zip(cc[loc == kernel.INSIDE], rr[loc == kernel.INSIDE]):
+        cover[int(pack_colrow(c, r))] = INSIDE
+    return zoom, (min_x, min_y, max_x, max_y), cover
+
+
+def assert_matches_reference(rings, zoom=None):
+    z = prepare_zone("d", rings, zoom)
+    want_zoom, want_bbox, want_cover = reference_prepare(rings, zoom)
+    assert z.zoom == want_zoom
+    assert z.bbox == want_bbox
+    assert np.array_equal(z.edges, rings_to_edges(rings))
+    assert z.cover == want_cover
+    return z
+
+
+def star(rng, n_vertices, cx, cy, radius):
+    """Closed star-shaped ring: sorted angles, radii in [0.55, 1] x radius."""
+    ang = np.sort(rng.uniform(0.0, 2.0 * np.pi, n_vertices))
+    rad = radius * rng.uniform(0.55, 1.0, n_vertices)
+    pts = np.stack([np.round(cx + rad * np.cos(ang)),
+                    np.round(cy + rad * np.sin(ang))], axis=1).astype(np.int64)
+    return np.vstack([pts, pts[:1]])
+
+
+def test_differential_star_rings():
+    """Star rings shaped like the benchmark's zones, 16-400 vertices."""
+    rng = np.random.default_rng(20)
+    for nv, radius in ((16, 500_000), (40, 1_200_000), (64, 1_500_000),
+                       (150, 1_800_000), (300, 1_900_000), (400, 2_000_000)):
+        cx, cy = (int(v) for v in rng.integers(-(1 << 28), 1 << 28, 2))
+        z = assert_matches_reference([star(rng, nv, cx, cy, radius)])
+        assert INSIDE in z.cover.values()
+
+
+def test_differential_concave_holed_self_intersecting():
+    s = 8 * CELL16
+    concave = ring((0, 0), (5 * CELL16, 0), (5 * CELL16, 3 * CELL16),
+                   (3 * CELL16, 3 * CELL16), (3 * CELL16, CELL16),
+                   (2 * CELL16, CELL16), (2 * CELL16, 4 * CELL16),
+                   (0, 4 * CELL16))
+    outer = ring((0, 0), (s, 0), (s, s), (0, s))
+    hole = ring((2 * CELL16 + 7, 2 * CELL16 - 3), (6 * CELL16, 2 * CELL16),
+                (6 * CELL16 - 11, 6 * CELL16), (2 * CELL16, 6 * CELL16 + 5))
+    bowtie = ring((0, 0), (s, s), (s, 0), (0, s))
+    pentagram = [(int(round(s * np.cos(a))), int(round(s * np.sin(a))))
+                 for a in np.pi / 2 + np.arange(5) * 4 * np.pi / 5]
+    for rings in ([concave], [outer, hole], [bowtie], [ring(*pentagram)],
+                  [outer, ring((CELL16, CELL16), (3 * CELL16, CELL16),
+                               (3 * CELL16, 3 * CELL16))]):
+        assert_matches_reference(rings)
+    # multipolygon: two disjoint stars
+    rng = np.random.default_rng(5)
+    assert_matches_reference([star(rng, 30, 0, 0, 400_000),
+                              star(rng, 50, 1_500_000, 300_000, 600_000)])
+
+
+def test_differential_zero_length_and_horizontal_edges():
+    s = 5 * CELL16
+    assert_matches_reference([ring((0, 0), (0, 0), (s, 0), (s, 0), (s, s),
+                                   (s // 2, s), (s // 2, s), (0, s))])
+    # staircase: every other edge horizontal, on and off cell borders
+    pts = [(0, 0)]
+    for i in range(1, 9):
+        pts += [(i * CELL16 // 3, (i - 1) * CELL16 // 2),
+                (i * CELL16 // 3, i * CELL16 // 2)]
+    pts += [(0, 4 * CELL16)]
+    assert_matches_reference([ring(*pts)])
+    # a degenerate ring (all one point) beside a real one
+    assert_matches_reference([ring((0, 0), (s, 0), (s, s)),
+                              np.array([[s // 3, s // 4]] * 3)])
+
+
+def test_differential_vertices_on_cell_borders():
+    """Vertices snapped to zoom-20 cell borders, then nudged by -1/0/+1."""
+    rng = np.random.default_rng(8)
+    shift = 32 - 20
+    for _ in range(12):
+        pts = rng.integers(0, 200, (int(rng.integers(3, 25)), 2)) << shift
+        pts = pts - (1 << 31) + rng.integers(-1, 2, pts.shape)
+        assert_matches_reference([pts], zoom=20)
+        assert_matches_reference([pts])
+
+
+def test_differential_edge_in_gap_between_columns():
+    """A near-vertical edge running inside the 1-unit gap between two
+    columns' closed boxes touches neither, yet the two cells it separates
+    differ in class — the case a per-run fill would get wrong."""
+    shift = 32 - 20
+    col = 1000
+    gap_x = (col << shift) - (1 << 31)          # min_x of column ``col``
+    y_top = (2**31 - 1) - (100 << shift)        # max_y of row 100
+    y_bot = y_top - 40 * (1 << shift) + 1       # min_y of row 139
+    left = [(gap_x - 1, y_bot), (gap_x + 30 * (1 << shift), y_bot),
+            (gap_x + 30 * (1 << shift), y_top), (gap_x, y_top)]
+    z = assert_matches_reference([ring(*left)], zoom=20)
+    mid_row = 120
+    assert z.cover.get(int(pack_colrow(col - 1, mid_row)), OUTSIDE) == OUTSIDE
+    assert z.cover[int(pack_colrow(col, mid_row))] == INSIDE
+
+
+def test_differential_giant_zone_and_explicit_zooms():
+    s = 1 << 28
+    z = assert_matches_reference([ring((-s, -s), (s, -s), (s, s), (-s, s))])
+    assert z.zoom < 16
+    rng = np.random.default_rng(3)
+    zone = [star(rng, 48, 1 << 20, -(1 << 21), 300_000)]
+    for zoom in range(8, 21):
+        assert_matches_reference(zone, zoom=zoom)
+
+
+def test_differential_random_zones():
+    rng = np.random.default_rng(12)
+    for i in range(40):
+        span = int(rng.choice([1 << 12, 1 << 16, 1 << 20, 1 << 22]))
+        base = rng.integers(-(1 << 30), 1 << 30, 2)
+        rings = [base + rng.integers(0, span, (int(rng.integers(3, 40)), 2))]
+        if i % 4 == 0:
+            rings.append(base + rng.integers(0, span, (5, 2)))
+        assert_matches_reference(rings)
+
+
+def _candidate_cells(z):
+    """Σ over edges of the cells in the edge's bbox cover at z.zoom."""
+    e = z.edges
+    cols = np.abs(col_from_x(e[:, 0], z.zoom) - col_from_x(e[:, 2], z.zoom))
+    rows = np.abs(row_from_y(e[:, 1], z.zoom) - row_from_y(e[:, 3], z.zoom))
+    return int(((cols + 1) * (rows + 1)).sum())
+
+
+def test_hostile_many_long_edges():
+    """Thousands of spokes each spanning a large part of the bbox: the
+    edges' bbox cells sum far past one expansion chunk, yet preparation
+    completes, stays within the cover budget and matches the reference
+    on a reduced variant."""
+    def spokes(n):
+        # a zigzag between a hub and the rim: every edge is a spoke
+        ang = np.linspace(0.0, 2.0 * np.pi, n, endpoint=False)
+        rad = np.where(np.arange(n) % 2, 40_000, 4_000_000)
+        pts = np.stack([np.round(rad * np.cos(ang)),
+                        np.round(rad * np.sin(ang))], axis=1).astype(np.int64)
+        return [np.vstack([pts, pts[:1]])]
+
+    z = prepare_zone("spokes", spokes(3000))
+    assert _candidate_cells(z) > 20 * zones_mod._EXPAND_CHUNK
+    assert 0 < len(z.cover) <= MAX_COVER_CELLS
+    assert_matches_reference(spokes(120))
+    # one edge whose own bbox cover is larger than a chunk
+    t = [ring((0, 0), (1100 << 12, 1 << 12), (1 << 12, 1100 << 12))]
+    assert _candidate_cells(prepare_zone("t", t, zoom=20)) \
+        > zones_mod._EXPAND_CHUNK
+    assert_matches_reference(t, zoom=20)
+
+
+def test_span_limit_still_raises():
+    s = MAX_ZONE_SPAN
+    with pytest.raises(ValueError):
+        prepare_zone("huge", [ring((-s // 2, 0), (s - s // 2, 0),
+                                   (0, 1000))])

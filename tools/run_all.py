@@ -2,7 +2,7 @@
 
 Usage: python tools/run_all.py
 Exit 0 iff everything is green. ~25-30 minutes on local[32]
-(464 tests + the 77-query gate + 16 plan audits + bench).
+(475 tests + the 77-query gate + 16 plan audits + bench).
 """
 
 from __future__ import annotations
